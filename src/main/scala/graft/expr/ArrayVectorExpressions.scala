@@ -1,11 +1,12 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
 
 /** Native Catalyst expressions for the vector hot path.
   *
@@ -368,106 +369,108 @@ case class PqLut(
     copy(child = newChild)
 }
 
-/** K-way nearest-centroid argmin as ONE expression node: for an input
-  * ARRAY<DOUBLE> row vector, the (cid, dist2) of the centroid minimizing
-  * the squared Euclidean distance, lowest-cid tiebreak. `flat` holds the
-  * k centroid vectors concatenated in ASCENDING-cid order (k·d doubles),
-  * `cids` the parallel cid list (same order), `d` the centroid width.
+/** The n nearest centroids of an ARRAY<DOUBLE> row vector as ONE
+  * expression node: `ARRAY<STRUCT<cid INT, dist2 DOUBLE>>` holding the
+  * min(n, k) centroids with the smallest squared Euclidean distance,
+  * ascending by (dist2, cid) — Spark's struct ordering, so the result is
+  * exactly `slice(array_sort(array(struct(d2, cid), …)), 1, n)` over the
+  * whole model. `flat` holds the k centroid vectors concatenated in
+  * ASCENDING-cid order (k·d doubles), `cids` the parallel cid list, `d`
+  * the centroid width. This is the engine's only n-D nearest-cell kernel:
+  * element 0 is the Lloyd/IVF assignment ([[graft.kmeans.OpsN.assignN]]),
+  * the first n are an IVF probe set.
   *
-  * BIT-IDENTICAL to the round-10 three-projection least/when chain it
-  * replaces (`OpsN.assignN`): each candidate distance folds
-  * left-to-right over min(d, row-dims) exactly like [[ArraySqDist]]
-  * (ragged rows fold the common prefix), the running min of doubles is
-  * the same value `least` computes in any order, and the strict `<`
-  * scan in ascending-cid order IS the when-chain's first-match-wins
-  * lowest-cid tiebreak — so every oracle-pinned consumer (Lloyd fits,
-  * IVF quantizers, semdedup cells) sees identical assignments.
+  * Each distance folds left-to-right over min(d, row-dims) exactly like
+  * [[ArraySqDist]] (ragged rows fold the common prefix), so element 0 is
+  * bit-identical to the SQL `least`/`when` argmin with its lowest-cid
+  * tiebreak — including rows whose distances are all NaN or +Inf, which
+  * rank by SQL's double ordering (NaN after +Inf) and fall to the lowest
+  * REAL cid, never a cid the model does not hold.
   *
-  * Why an expression and not the chain (round-20, guide §7.3): the chain
-  * builds 3 projections with k distance nodes + a k-deep when-chain that
-  * Catalyst re-analyzes and whole-stage codegen re-generates PER
-  * ITERATION of every quantizer loop — measured ~60–140 ms of driver
-  * time per iteration on the IVF keys at k=8, and the centroids CHANGE
-  * each iteration so no plan-level caching helps. Here the model rides
-  * as runtime references (the [[PqEncode]] discipline): the plan is one
-  * node, and the generated source is IDENTICAL across iterations (only
-  * the reference objects differ), so janino's compile cache hits.
+  * Why an expression (round-20, guide §7.3): the model rides as runtime
+  * references, so the plan is one node whatever k is, and the generated
+  * source is identical across quantizer iterations (only the reference
+  * objects differ) — janino's compile cache hits where a k-deep literal
+  * chain re-analyzed and re-generated ~60–140 ms of driver time per
+  * iteration. Per row the work is the inherent O(k·d) plus an O(n)
+  * insertion per improving candidate; no exchange, no join.
   */
 case class NearestCentroid(
     child: Expression,
     flat: Array[Double],
     cids: Array[Int],
-    d: Int) extends UnaryExpression {
+    d: Int,
+    n: Int) extends UnaryExpression {
   require(d > 0, s"d=$d")
+  require(n > 0, s"n=$n")
   require(cids.length >= 1, "empty centroid set")
   require(flat.length == cids.length * d,
     s"flat length ${flat.length} != k*d = ${cids.length * d}")
 
-  private def k: Int = cids.length
+  private def m: Int = math.min(n, cids.length)
 
   override def prettyName: String = "nearest_centroid"
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField(
-      "cid", org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("dist2", DoubleType,
-      nullable = false)))
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("cid", IntegerType, nullable = false),
+    StructField("dist2", DoubleType, nullable = false))), containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nDims = v.numElements()
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < k) {
-      val n = math.min(nDims, d)
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val diff = v.getDouble(i) - flat(c * d + i)
-        acc += diff * diff
-        i += 1
-      }
-      if (acc < bestD) { bestD = acc; best = cids(c) }
-      c += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(best, bestD)
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestCentroid.nearest(input.asInstanceOf[ArrayData], flat, cids, d, m)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val flatRef = ctx.addReferenceObj("ncFlat", flat, "double[]")
     val cidsRef = ctx.addReferenceObj("ncCids", cids, "int[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val nDims = ctx.freshName("nDims")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val diff = ctx.freshName("diff")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      s"""
-         |int $nDims = $v.numElements();
-         |int $n = java.lang.Math.min($nDims, $d);
-         |int $best = 0;
-         |double $bestD = Double.MAX_VALUE;
-         |for (int $c = 0; $c < ${k}; $c++) {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $diff = $v.getDouble($i) - $flatRef[$c * $d + $i];
-         |    $acc += $diff * $diff;
-         |  }
-         |  if ($acc < $bestD) { $bestD = $acc; $best = $cidsRef[$c]; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions
-         |  .GenericInternalRow(new Object[] {
-         |    java.lang.Integer.valueOf($best),
-         |    java.lang.Double.valueOf($bestD) });
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.expr.NearestCentroid.nearest($v, $flatRef, $cidsRef, $d, $m);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object NearestCentroid {
+  /** Strict "sorts before" under SQL's double ordering: NaN sorts after
+    * every number (+Inf included) and equals itself.
+    */
+  @inline private def before(a: Double, b: Double): Boolean =
+    a < b || (b != b && a == a)
+
+  /** The kernel both eval paths run: one scan of the model in ascending
+    * cid order keeping the m best (dist2, cid) in an insertion-sorted
+    * buffer. A later candidate displaces an earlier one only when
+    * strictly [[before]] it, so equal distances keep the lower cid.
+    */
+  def nearest(
+      v: ArrayData, flat: Array[Double], cids: Array[Int], d: Int,
+      m: Int): ArrayData = {
+    val len = math.min(v.numElements(), d)
+    val topD = new Array[Double](m)
+    val topC = new Array[Int](m)
+    var filled = 0
+    var c = 0
+    while (c < cids.length) {
+      val base = c * d
+      var acc = 0.0
+      var i = 0
+      while (i < len) {
+        val diff = v.getDouble(i) - flat(base + i)
+        acc += diff * diff
+        i += 1
+      }
+      if (filled < m || before(acc, topD(m - 1))) {
+        var j = if (filled < m) { filled += 1; filled - 1 } else m - 1
+        while (j > 0 && before(acc, topD(j - 1))) {
+          topD(j) = topD(j - 1)
+          topC(j) = topC(j - 1)
+          j -= 1
+        }
+        topD(j) = acc
+        topC(j) = cids(c)
+      }
+      c += 1
+    }
+    new GenericArrayData(Array.tabulate[Any](m)(j => InternalRow(topC(j), topD(j))))
+  }
 }
 
 object ArrayVector {
@@ -491,18 +494,20 @@ object ArrayVector {
   def sqDist(a: Column, b: Column): Column =
     Bridge.column(ArraySqDist(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Column API: codegen'd K-way argmin (see [[NearestCentroid]]).
-    * `centroids` is (cid, vector) pairs; sorted ascending-cid here so the
-    * strict-< scan reproduces the lowest-cid tiebreak.
+  /** Column API: the `n` nearest centroids of `v` (see
+    * [[NearestCentroid]]). `centroids` is (cid, vector) pairs; sorted
+    * ascending-cid here so equal distances keep the lower cid.
     */
-  def nearestCentroid(v: Column, centroids: Seq[(Int, Array[Double])]): Column = {
+  def nearestCentroids(
+      v: Column, centroids: Seq[(Int, Array[Double])], n: Int): Column = {
     val sorted = centroids.sortBy(_._1)
     val d = sorted.head._2.length
     Bridge.column(NearestCentroid(
       Bridge.expression(v),
       sorted.flatMap(_._2).toArray,
       sorted.map(_._1).toArray,
-      d))
+      d,
+      n))
   }
 
   /** Column API: codegen'd PQ asymmetric-distance accumulate. */

@@ -26,9 +26,7 @@ object Lloyd {
   def fit(points: DataFrame, cfg: KMeansConfig): KMeansResult2 = {
     require(cfg.k > 0, "k must be positive")
     val input = if (cfg.f32Wire) Ops.castF32(points) else points
-    val cached = input.persist(StorageLevel.MEMORY_AND_DISK)
-    try fitCached(cached, cfg)
-    finally cached.unpersist(blocking = false)
+    CachedInput(input)(fitCached(_, cfg))
   }
 
   /** Round a model through float32 — the reference's protobuf wire funnel
@@ -78,8 +76,7 @@ object Lloyd {
     // cached like fit: `iters` iterations cost `iters` passes over cached
     // partitions, not `iters` source re-scans (at 100 TB a 3-iteration run
     // would otherwise pay 3 full parquet reads)
-    val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    CachedInput(points) { cached =>
       var centroids = Ops.collectCentroids(Ops.initFirstK(cached, k))
       var i = 0
       while (i < iters) {
@@ -88,7 +85,7 @@ object Lloyd {
         i += 1
       }
       centroids
-    } finally cached.unpersist(blocking = false)
+    }
   }
 
   /** [[iterate]] under the reference's float32 wire funnel
@@ -103,8 +100,7 @@ object Lloyd {
     // cache AFTER the f32 funnel so the rounded coordinates are what's
     // stored — each iteration re-reads the cached f32 points, not the
     // source (see [[iterate]] on why the cache matters at scale)
-    val fpts = Ops.castF32(points).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    CachedInput(Ops.castF32(points)) { fpts =>
       var centroids = roundF32(Ops.collectCentroids(Ops.initFirstK(fpts, k)))
       var i = 0
       while (i < iters) {
@@ -113,6 +109,20 @@ object Lloyd {
         i += 1
       }
       centroids
-    } finally fpts.unpersist(blocking = false)
+    }
   }
+}
+
+/** Caches a k-means loop's input for its repeated passes. Persists only a
+  * frame whose plan is not cached yet and unpersists only what it
+  * persisted, so a caller's own cache of the same plan survives the call.
+  */
+private[kmeans] object CachedInput {
+  def apply[A](df: DataFrame)(body: DataFrame => A): A =
+    if (df.storageLevel != StorageLevel.NONE) body(df)
+    else {
+      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      try body(cached)
+      finally cached.unpersist(blocking = false)
+    }
 }

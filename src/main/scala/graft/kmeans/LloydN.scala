@@ -1,7 +1,6 @@
 package graft.kmeans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** n-D Lloyd driver loop — same structure as [[Lloyd]] (one Spark job per
   * iteration: shuffle-free assign → one-pass VectorMean aggregate → O(K·d)
@@ -11,9 +10,7 @@ object LloydN {
 
   def fit(points: DataFrame, cfg: KMeansConfig): KMeansResultN = {
     require(cfg.k > 0, "k must be positive")
-    val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
-    try fitCached(cached, cfg)
-    finally cached.unpersist(blocking = false)
+    CachedInput(points)(fitCached(_, cfg))
   }
 
   private def fitCached(points: DataFrame, cfg: KMeansConfig): KMeansResultN = {
@@ -44,22 +41,20 @@ object LloydN {
     * group-by-assigned semantics.
     */
   def iterateN(points: DataFrame, k: Int, iters: Int): Seq[CentroidN] = {
-    val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    CachedInput(points) { cached =>
       var centroids = OpsN.collectCentroidsN(OpsN.initFirstKN(cached, k))
       require(centroids.nonEmpty, s"fewer than 1 point available for k=$k init")
       var i = 0
       while (i < iters) {
-        // adaptive formulation: a corpus-SIZED quantizer (k ~ n/occupancy,
-        // cf. Similarity.semDedupSized) would otherwise pay a k-deep
-        // literal codegen chain per iteration — fitting, not the pairwise
-        // step, then dominates the whole operator
+        // the one-node kernel at any k: a corpus-SIZED quantizer (k ~
+        // n/occupancy, cf. Similarity.semDedupSized) still plans a single
+        // node per iteration and never shuffles the points
         centroids = OpsN.collectCentroidsN(
-          OpsN.updateN(OpsN.assignNAdaptive(cached, centroids)).drop("n"))
+          OpsN.updateN(OpsN.assignN(cached, centroids)).drop("n"))
         i += 1
       }
       centroids
-    } finally cached.unpersist(blocking = false)
+    }
   }
 
   /** [[iterateN]] with the quantizer fit on a DETERMINISTIC hash-sample

@@ -145,11 +145,12 @@ object Ops {
       best.as("dist2"))
   }
 
-  /** J1 variant realized as an explicit broadcast cross join + window argmin
-    * (the plan shape the reference literally implements: points × all K
-    * centroids, then per-point min — SURVEY.md §2.3). Kept as the
-    * oracle-shaped formulation and as the path for LARGE centroid sets
-    * (K too big for a literal); `assign` is the fast path.
+  /** J1 variant realized as an explicit broadcast cross join + per-row
+    * min (the plan shape the reference literally implements: points × all
+    * K centroids, then per-point min — SURVEY.md §2.3). Kept only as the
+    * deliberate contrast form behind the `j1_crossjoin_assign` key; no
+    * engine path routes through it — `assign` (2-D) and
+    * [[OpsN.assignN]] (n-D, any K) are the shuffle-free assignments.
     */
   def assignCrossJoin(points: DataFrame, centroids: DataFrame): DataFrame = {
     val c = broadcast(

@@ -8,13 +8,12 @@ import org.apache.spark.sql.functions._
   * arity, `mapper.py:110`; the reducer's mean is n-D, `reducer.py:124-132`;
   * only the wire protocol clamps it to 2-D, `comm.proto:50-53`).
   *
-  * Scale notes: assignment stays a shuffle-free per-row projection (the
-  * K·d centroid model rides as runtime references of one codegen'd
-  * argmin node — [[graft.expr.NearestCentroid]]); the update is a single
-  * partial+final aggregation via [[VectorMean]], so the exchange carries
-  * O(K·d·partitions) bytes. For K·d too large for one per-row loop
-  * (≫10^4), use [[assignCrossJoinN]], which broadcasts the centroid
-  * table instead.
+  * Scale notes: assignment stays a shuffle-free per-row projection at
+  * any K (the K·d centroid model rides as runtime references of one
+  * codegen'd nearest-cell node — [[graft.expr.NearestCentroid]], the
+  * engine's only n-D argmin); the update is a single partial+final
+  * aggregation via [[VectorMean]], so the exchange carries
+  * O(K·d·partitions) bytes.
   */
 object OpsN {
 
@@ -23,15 +22,6 @@ object OpsN {
     embeddings.select(
       col("vec_id").as("pid"),
       col("embedding").cast("array<double>").as("features"))
-
-  /** Squared Euclidean distance between two ARRAY<DOUBLE> columns — the
-    * codegen'd [[graft.expr.ArraySqDist]] expression (same left-to-right
-    * multiply/add fold as `aggregate(zip_with(...))`, so bit-identical to
-    * DuckDB's `list_sum(list_transform(...))`, but inside whole-stage
-    * codegen instead of the interpreted higher-order-function path).
-    */
-  def dist2N(a: Column, b: Column): Column =
-    graft.expr.ArrayVector.sqDist(a, b)
 
   /** L1 n-D: first K rows in pid order become centroids 0..K-1.
     * (Rank after limit(k) touches only K rows; the non-foldable
@@ -57,13 +47,13 @@ object OpsN {
       .sortBy(_.cid)
       .toSeq
 
-  /** The centroid model as a literal ARRAY<STRUCT<cid, features>> column. */
-  def centroidLiteralN(centroids: Seq[CentroidN]): Column =
-    array(centroids.sortBy(_.cid).map { c =>
-      struct(
-        lit(c.cid).as("cid"),
-        array(c.features.toIndexedSeq.map(lit(_)): _*).as("features"))
-    }: _*)
+  /** The `n` nearest centroids of each `features` row as
+    * ARRAY<STRUCT<cid, dist2>>, ascending (dist2, cid) — the one kernel
+    * behind every n-D assignment and IVF probe.
+    */
+  def nearestCells(features: Column, centroids: Seq[CentroidN], n: Int): Column =
+    graft.expr.ArrayVector.nearestCentroids(
+      features, centroids.map(c => (c.cid, c.features)), n)
 
   /** J1+A3 n-D: nearest-centroid assignment, lowest-cid tiebreak.
     * Output: (pid, features, cid, dist2).
@@ -74,26 +64,15 @@ object OpsN {
     require(
       centroids.forall(_.features.length == d),
       "assignN: ragged centroid dimensions")
-    // ONE codegen'd argmin node with the model as runtime references
-    // ([[graft.expr.NearestCentroid]]) — bit-identical values to the
-    // round-10 three-projection least/when chain (same left-to-right
-    // distance fold, same min, same lowest-cid tiebreak; asserted in
-    // NDimSpec/KMeansProperties), but the plan no longer carries k
-    // distance nodes + a k-deep when-chain that Catalyst re-analyzes and
-    // codegen re-generates per quantizer ITERATION (round-20, guide
-    // §7.3: ~60–140 ms driver per iteration at k=8 across the IVF/Lloyd
-    // family; the generated source is iteration-invariant, so janino's
-    // compile cache hits where the chain's changing literals forced a
-    // fresh source walk each time).
-    // TWO projections (argmin struct → field extraction), the second
+    // element 0 of the kernel's top-1: one codegen'd node whatever k is,
+    // with no shuffle or join (see [[graft.expr.NearestCentroid]]).
+    // TWO projections (kernel → field extraction), the second
     // referencing the first's ATTRIBUTE: CollapseProject keeps a
     // non-cheap alias referenced twice apart, so the argmin evaluates
     // once per row, and whole-stage codegen still fuses the pair.
-    val nc = graft.expr.ArrayVector.nearestCentroid(
-      col("features"),
-      centroids.map(c => (c.cid, c.features)))
     points
-      .select(col("pid"), col("features"), nc.as("__gnc"))
+      .select(col("pid"), col("features"),
+        nearestCells(col("features"), centroids, 1)(0).as("__gnc"))
       .select(
         col("pid"),
         col("features"),
@@ -101,50 +80,10 @@ object OpsN {
         col("__gnc.dist2").as("dist2"))
   }
 
-  /** [[assignN]] while the centroid set fits the per-row argmin loop
-    * (k ≤ `literalBound`), [[assignCrossJoinN]] past it: the single-node
-    * loop is unbeatable at small k (zero shuffle, O(k·d) per row), but a
-    * corpus-sized quantizer (k ~ n/occupancy) needs the broadcast join's
-    * per-partition hash relation rather than an every-row full scan of
-    * the model. Same distances, same lowest-cid tiebreak either way;
-    * downstream aggregation order (and so last-ulp mean noise) can
-    * differ, which is why every ORACLE-checked path runs at
-    * k ≤ literalBound.
+  /** Alias of [[assignN]], kept only because the traced `kmeans.assign_cells`
+    * operation in `perfbench/src/main/scala/perfbench/Workloads.scala` calls it.
     */
-  def assignNAdaptive(
-      points: DataFrame,
-      centroids: Seq[CentroidN],
-      literalBound: Int = 64): DataFrame =
-    if (centroids.size <= literalBound) assignN(points, centroids)
-    else {
-      val spark = points.sparkSession
-      import spark.implicits._
-      assignCrossJoinN(points,
-        centroids.map(c => (c.cid, c.features.toSeq)).toDF("cid", "features"))
-    }
-
-  /** Broadcast-join formulation for centroid sets too large to inline as a
-    * plan literal. Per-row argmin via `min_by`-style struct min under a
-    * groupBy on a generated row id.
-    */
-  def assignCrossJoinN(points: DataFrame, centroids: DataFrame): DataFrame = {
-    val c = broadcast(
-      centroids.select(col("cid").cast("int").as("cid"), col("features").as("cf")))
-    points
-      .withColumn("rid", monotonically_increasing_id())
-      .crossJoin(c)
-      .withColumn("dist2", dist2N(col("features"), col("cf")))
-      .groupBy(col("rid"))
-      .agg(
-        first(col("pid")).as("pid"),
-        first(col("features")).as("features"),
-        min(struct(col("dist2"), col("cid"))).as("best"))
-      .select(
-        col("pid"),
-        col("features"),
-        col("best.cid").as("cid"),
-        col("best.dist2").as("dist2"))
-  }
+  def assignNAdaptive(points: DataFrame, cs: Seq[CentroidN]): DataFrame = assignN(points, cs)
 
   /** A2 n-D: per-cluster mean vector via the one-pass [[VectorMean]]
     * aggregator. Output: (cid, features, n).

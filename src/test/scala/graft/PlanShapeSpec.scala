@@ -297,6 +297,30 @@ class PlanShapeSpec extends AnyFunSuite {
       "an embeddings scan without the query filter re-reads the corpus")
   }
 
+  test("IVF assign at nlist=80: one nearest_centroid node") {
+    import graft.kmeans.OpsN
+    import graft.sim.Similarity
+    val all = OpsN.pointsFromEmbeddings(Graft.table(spark, sf, "embeddings"))
+    // 80 cells, past the old 64-centroid switch to a broadcast cross-join
+    val model = OpsN.collectCentroidsN(OpsN.initFirstKN(all, 80))
+    assert(model.size === 80)
+    val plan = executed(OpsN.assignN(all, model)).toString
+    assert("nearest_centroid".r.findAllIn(plan).size === 1,
+      s"expected one nearest_centroid node:\n${plan.take(1200)}")
+    assert(!plan.contains("Exchange"), s"unexpected shuffle:\n${plan.take(1200)}")
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"cross-join in the assignment:\n${plan.take(1200)}")
+    // the store's query probe is the same kernel's top-nprobe, not a
+    // per-row sort of every cell
+    val vecs = all.select(col("pid").as("id"), col("features").as("vec"))
+    val store = "target/test_ivfstore80"
+    Similarity.writeIvfIndex(vecs, nlist = 80, path = store, maxIter = 1)
+    val search = executed(Similarity.ivfTopKFromStore(
+      vecs.filter(col("id") < 10), store, k = 5, nprobe = 3)).toString
+    assert(search.contains("nearest_centroid"), search.take(1200))
+    assert(!search.contains("array_sort"), s"per-row probe sort:\n${search.take(1200)}")
+  }
+
   test("ivfTopKFromStorePq probes the PQ code tier (pqcode bytes, no cv) " +
       "and re-ranks from the exact tier; the corpus is never re-read") {
     import org.apache.spark.sql.execution.FileSourceScanExec

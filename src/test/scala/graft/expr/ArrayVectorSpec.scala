@@ -114,6 +114,39 @@ class ArrayVectorSpec extends AnyFunSuite {
     assert(adc === lut(3) + lut(9))
   }
 
+  test("nearestCentroids: top-n by (dist2, cid), capped at k") {
+    import org.apache.spark.sql.functions.col
+    // (1,1) is equidistant (2.0) from cids 2 and 5: the lower cid first
+    val model = Seq(5 -> Array(2.0, 0.0), 2 -> Array(0.0, 0.0),
+      9 -> Array(1.0, 1.0), 7 -> Array(4.0, 4.0))
+    val df = Seq((1L, Seq(1.0, 1.0))).toDF("id", "v")
+    def top(n: Int) = df
+      .select(ArrayVector.nearestCentroids(col("v"), model, n).as("t"))
+      .as[Seq[(Int, Double)]].head()
+    assert(top(1) === Seq(9 -> 0.0))
+    assert(top(3) === Seq(9 -> 0.0, 2 -> 2.0, 5 -> 2.0))
+    assert(top(10) === Seq(9 -> 0.0, 2 -> 2.0, 5 -> 2.0, 7 -> 18.0))
+  }
+
+  test("nearestCentroids: NaN or +Inf rows take the lowest real cid") {
+    import org.apache.spark.sql.functions.col
+    // a model with no cid 0 (as after a Drop-policy fit loses cluster 0)
+    val model = Seq(1 -> Array(0.0, 0.0), 2 -> Array(1.0, 1.0))
+    def nearest(v: Seq[Double]) = Seq((1L, v)).toDF("id", "v")
+      .select(ArrayVector.nearestCentroids(col("v"), model, 1)(0).as("t"))
+      .select(col("t.cid"), col("t.dist2")).as[(Int, Double)].head()
+    val (infCid, infD) = nearest(Seq(1e200, 1e200))
+    assert(infCid === 1 && infD.isPosInfinity)
+    val (nanCid, nanD) = nearest(Seq(Double.NaN, 0.0))
+    assert(nanCid === 1 && nanD.isNaN)
+    // SQL's double ordering puts NaN after +Inf: the +Inf centroid wins
+    val mixed = Seq(1 -> Array(0.0, Double.NaN), 2 -> Array(0.0, 0.0))
+    val t = Seq((1L, Seq(1e200, 0.0))).toDF("id", "v")
+      .select(ArrayVector.nearestCentroids(col("v"), mixed, 2).as("t"))
+      .as[Seq[(Int, Double)]].head()
+    assert(t.map(_._1) === Seq(2, 1))
+  }
+
   test("whole-stage codegen covers the expression (no interpreted fallback)") {
     // needs a non-local source: literal local relations constant-fold to a
     // LocalTableScan with no codegen stage at all

@@ -43,23 +43,30 @@ class NDimSpec extends AnyFunSuite {
     assert(got === Map(1L -> 0, 2L -> 1, 3L -> 0))
   }
 
-  test("assignN and assignCrossJoinN agree") {
-    val pts = ndDf(
-      (1L, Seq(0.0, 1.0, 2.0)),
-      (2L, Seq(9.0, 9.0, 9.0)),
-      (3L, Seq(4.0, 4.0, 4.0)),
-      (4L, Seq(-1.0, 0.0, 1.0)))
-    val cs = Seq(
-      CentroidN(0, Array(0.0, 0.0, 0.0)),
-      CentroidN(1, Array(9.0, 9.0, 9.0)))
-    val csDf = cs.map(c => (c.cid, c.features)).toDF("cid", "features")
-    val a = OpsN.assignN(pts, cs)
+  test("assignN at k=80 equals a plain-Scala argmin") {
+    // 80 centroids (past the old 64-centroid switch) on an integer grid;
+    // odd coordinates put points exactly between grid cells, so exact
+    // distance ties occur and the lowest cid must win them
+    val cs = (0 until 80).map(i =>
+      CentroidN(i, Array((i % 10) * 2.0, (i / 10) * 2.0, (i % 3) * 1.0)))
+    val raw = (0 until 300).map(i =>
+      (i.toLong, Array((i % 21) * 1.0, (i % 17) * 1.0, (i % 5) * 0.5)))
+    val pts = raw.toDF("pid", "features")
+    def d2(a: Array[Double], b: Array[Double]): Double =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + (x - y) * (x - y) }
+    val expected = raw.map { case (pid, f) =>
+      val (d, cid) = cs.map(c => (d2(f, c.features), c.cid)).min
+      (pid, cid, d)
+    }
+    val ties = raw.count { case (_, f) =>
+      val ds = cs.map(c => d2(f, c.features))
+      ds.count(_ == ds.min) > 1
+    }
+    assert(ties > 0, "the fixture must exercise exact ties")
+    val got = OpsN.assignN(pts, cs)
       .select("pid", "cid", "dist2").as[(Long, Int, Double)]
       .collect().sortBy(_._1)
-    val b = OpsN.assignCrossJoinN(pts, csDf)
-      .select("pid", "cid", "dist2").as[(Long, Int, Double)]
-      .collect().sortBy(_._1)
-    assert(a.toSeq === b.toSeq)
+    assert(got.toSeq === expected)
   }
 
   test("updateN (VectorMean) equals updateNExploded (posexplode+avg)") {

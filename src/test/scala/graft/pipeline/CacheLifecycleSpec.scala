@@ -136,6 +136,23 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"fixed-iteration loop leaked persistent RDDs: $leaked")
   }
 
+  test("Lloyd loops keep a caller's own cache") {
+    import graft.kmeans.{KMeansConfig, Lloyd, LloydN}
+    import org.apache.spark.storage.StorageLevel
+    val pts2 = points.persist(StorageLevel.MEMORY_ONLY)
+    val ptsN = (1L to 40L).map(i => (i, Array(i * 1.0, i * 2.0)))
+      .toDF("pid", "features").persist(StorageLevel.MEMORY_ONLY)
+    try {
+      assert(Lloyd.fit(pts2, KMeansConfig(k = 3, maxIter = 3)).centroids.size === 3)
+      assert(LloydN.iterateN(ptsN, k = 3, iters = 3).size === 3)
+      assert(pts2.storageLevel === StorageLevel.MEMORY_ONLY)
+      assert(ptsN.storageLevel === StorageLevel.MEMORY_ONLY)
+    } finally {
+      pts2.unpersist(blocking = true)
+      ptsN.unpersist(blocking = true)
+    }
+  }
+
   test("releaseAll on a session with nothing tracked is a no-op") {
     OpCaches.releaseAll(spark)
     assert(OpCaches.trackedCount(spark) === 0)

@@ -130,30 +130,32 @@ class KnnJoinSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("probeLegs: iterated-argmin form == literal form, and caps at nlist") {
+  test("probeLegs equals a plain-Scala (d2, cell) sort") {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.kmeans.{CentroidN, OpsN}
-    // 80 cells (> the production literalBound of 64) on a 10x8 grid,
-    // 200 points scattered among them
+    // 80 cells (past the old 64-cell switch) on a 10x8 grid, 200 points
+    // scattered among them
     val model = (0 until 80).map(i =>
       CentroidN(i, Array((i % 10) * 2.0, (i / 10) * 2.0)))
-    val pts = (0 until 200).map(i =>
-      (i.toLong, Seq((i % 19) * 1.05, (i % 37) * 0.41))).toDF("pid", "features")
-    val cells = OpsN.assignNAdaptive(pts, model)
+    val raw = (0 until 200).map(i =>
+      (i.toLong, Seq((i % 19) * 1.05, (i % 37) * 0.41)))
+    val cells = OpsN.assignN(raw.toDF("pid", "features"), model)
       .select(col("pid").as("id"), col("features").as("v"),
         lit(1.0).as("nn"), col("cid").as("cell"))
-    def legs(bound: Int, np: Int) =
-      Similarity.probeLegs(cells, model, np, literalBound = bound)
+    def legs(np: Int) =
+      Similarity.probeLegs(cells, model, np)
         .select(col("cell"), col("id")).as[(Int, Long)].collect().toSet
-    // bound=1000 forces the literal array_sort form, bound=0 the
-    // iterated-argmin form — probe sets must be bit-identical
-    val lit3 = legs(1000, 3)
-    val itr3 = legs(0, 3)
-    assert(lit3 === itr3)
-    assert(itr3.size === 600, "every point probes exactly 3 cells")
-    // nprobe past nlist caps at nlist (cap applied before the form
-    // branch, so one form suffices; 100 ≡ 80 probes everything)
-    assert(legs(1000, 100) === legs(1000, 80))
+    def d2(a: Seq[Double], b: Array[Double]): Double =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + (x - y) * (x - y) }
+    val expected = raw.flatMap { case (id, v) =>
+      model.map(c => (d2(v, c.features), c.cid)).sorted.take(3)
+        .map { case (_, cell) => (cell, id) }
+    }.toSet
+    val got3 = legs(3)
+    assert(got3 === expected)
+    assert(got3.size === 600, "every point probes exactly 3 cells")
+    // nprobe past nlist caps at nlist (100 ≡ 80 probes everything)
+    assert(legs(100) === legs(80))
   }
 
   test("knnJoinSized with targetCellSize >= n degenerates to one cell") {
